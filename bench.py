@@ -47,6 +47,7 @@ the stored full-methodology spans under `scaling`.
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import subprocess
@@ -567,16 +568,26 @@ HEADLINE = [
 
 
 def main() -> None:
-    if "--scaling" in sys.argv:
+    ap = argparse.ArgumentParser(
+        description=__doc__, formatter_class=argparse.RawDescriptionHelpFormatter
+    )
+    mode = ap.add_mutually_exclusive_group()
+    mode.add_argument("--pipeline-only", action="store_true", help="run just the KG pipeline")
+    mode.add_argument("--scaling", action="store_true", help="local[8] vs local[32] span")
+    mode.add_argument("--scaling-busmatched", action="store_true", help="bus-load-matched span")
+    mode.add_argument("--scaling-cluster", action="store_true", help="multi-JVM cluster span")
+    mode.add_argument("--membw", action="store_true", help="DRAM bandwidth sweep")
+    args = ap.parse_args()
+    if args.scaling:
         return scaling_main()
-    if "--scaling-busmatched" in sys.argv:
+    if args.scaling_busmatched:
         return busmatched_main()
-    if "--scaling-cluster" in sys.argv:
+    if args.scaling_cluster:
         return cluster_main()
-    if "--membw" in sys.argv:
+    if args.membw:
         return membw_main()
 
-    pipeline_only = "--pipeline-only" in sys.argv
+    pipeline_only = args.pipeline_only
     sf = _sf_of(SF_DIR)
     spark = _make_spark(CPUS)
     spark.sparkContext.setLogLevel("ERROR")

@@ -111,7 +111,12 @@ MIN_JUDGE_LEN = 3
 
 @dataclass(frozen=True)
 class PipelineConfig:
-    """Knobs for the end-to-end KG pipeline."""
+    """Knobs for the batch KG build (plans.pipeline.run_pipeline) and the
+    incremental one (streaming.incremental), which call the same step
+    implementations.  Where a step has two routes, the route follows an
+    observed size: the surface count against linking_driver_max_nodes,
+    the verified-edge count against cc_driver_max_edges, and (inside the
+    matcher) the gazetteer size."""
 
     gazetteer: tuple[tuple[str, str], ...] = DEFAULT_GAZETTEER
     ontology: Ontology = field(default_factory=Ontology)
@@ -131,21 +136,11 @@ class PipelineConfig:
     # distributed loop: the edge set is orders of magnitude smaller than
     # the mention table (it exists only where surfaces near-duplicate),
     # so small/medium graphs pay 1 job instead of rounds x checkpoints.
-    # Above it, the DataFrame-join min-label loop runs (the 10^12-turn
-    # path; force it everywhere with cc_driver_max_edges=0).
+    # Above it, alternating large-star/small-star (Kiveris et al.,
+    # SoCC'14 — the algorithm BASELINE.json::north_star names) runs in
+    # DataFrame joins: the 10^12-turn path, O(log^2 n) rounds worst case
+    # (force it everywhere with cc_driver_max_edges=0).
     cc_driver_max_edges: int = 200_000
-    # distributed CC algorithm above cc_driver_max_edges:
-    #  "star"        — alternating large-star/small-star (Kiveris et al.,
-    #                  SoCC'14), the algorithm BASELINE.json::north_star
-    #                  names; per round two grouped-min joins over the
-    #                  shrinking edge set, O(log^2 n) rounds worst case
-    #                  but edges collapse toward stars monotonically so
-    #                  late rounds are near-free;
-    #  "hash_to_min" — min-label propagation over the static edge set,
-    #                  O(diameter) rounds of constant-size joins.
-    # Both produce identical (node_id -> min-id component) labels
-    # (parity-tested in tests/test_linking.py).
-    cc_algorithm: str = "star"
     # When the distinct (text,label) surface vocabulary fits under this
     # bound, the WHOLE linking stage (MinHash -> LSH banding -> block cap
     # -> Jaccard verify -> CC) runs on the driver from one collect: the
@@ -160,12 +155,6 @@ class PipelineConfig:
     # None = operators.graph.LAYOUT_SCHEMA.  The config analog of the
     # reference's per-project schema.json (layout_kg.py:127-147).
     layout_schema: tuple[tuple[str, tuple[str, ...]], ...] | None = None
-    # >1 salts the relation seg_id self-join (relations.cooccurrence_triples):
-    # shuffle key becomes (seg_id, _salt) so one pathological segment's
-    # pair generation spreads over this many reducers.  0/1 = unsalted
-    # (AQE skew-split is the always-on backstop); output is identical
-    # either way (parity-tested in tests/test_relations.py).
-    relation_salts: int = 0
     # >0 switches segmentation to the two-phase bucketed numbering
     # (segment_transcripts_bucketed): the conv_id ordering key is salted
     # by turn-range bucket so one enormous conversation spreads over

@@ -326,20 +326,22 @@ class TableStore:
             return self.snapshot_write(delta, name, op="merge")
         base = self.snapshot_read(name)
         merged = base.join(delta.select(*keys).distinct(), on=keys, how="left_anti").unionByName(delta)
-        # materialize BEFORE the commit dir write begins so the new
-        # snapshot never reads its own partially-written files
+        # merged reads the current snapshot's dir; snapshot_write writes a
+        # new snap-{id} dir, so the plan never reads its own output
         return self.snapshot_write(merged, name, op="merge")
 
     def expire_snapshots(self, name: str, keep_last: int = 2) -> list[int]:
         """Prune all but the last ``keep_last`` snapshots (Iceberg's
-        expire_snapshots maintenance action): their data dirs are
-        deleted and their ids become unreadable; returns expired ids."""
+        expire_snapshots maintenance action): their ids become unreadable
+        and their data dirs are deleted; returns expired ids.  The pruned
+        log commits BEFORE any dir is deleted, so a crash in between
+        leaves orphan dirs, never log entries pointing at deleted data."""
         log = self._vlog(name)
         drop, keep = log["snapshots"][:-keep_last], log["snapshots"][-keep_last:]
-        for s in drop:
-            shutil.rmtree(os.path.join(self.path(name), s["dir"]), ignore_errors=True)
         log["snapshots"] = keep
         self._vlog_commit(name, log)
+        for s in drop:
+            shutil.rmtree(os.path.join(self.path(name), s["dir"]), ignore_errors=True)
         return [s["id"] for s in drop]
 
     # ---- stage markers (resume support) --------------------------------

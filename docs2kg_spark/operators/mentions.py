@@ -464,78 +464,37 @@ def make_extract_udf(spark: SparkSession, cfg: PipelineConfig):
     return extract
 
 
-def make_extract_mentions_udf(spark: SparkSession, cfg: PipelineConfig):
-    payload = (tuple(cfg.gazetteer), tuple(cfg.ontology.entity_types), cfg.min_judge_len)
-    bc = spark.sparkContext.broadcast(payload)
-
-    @pandas_udf(MENTION_ARRAY)
-    def extract_mentions(texts: pd.Series) -> pd.Series:
-        gazetteer, entity_types, min_judge_len = bc.value
-        index = _get_index(gazetteer)
-        llm_entries = _get_llm_entries(gazetteer, entity_types)
-        return pd.Series(
-            [_extract_one(t, llm_entries, index, min_judge_len) for t in texts]
-        )
-
-    return extract_mentions
-
-
-def extract_fused(
-    segments: DataFrame, spark: SparkSession, cfg: PipelineConfig | None = None
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """One fused pass → (enriched, mentions, triples).  Persist the
-    enriched parent before consuming mentions AND triples so the UDF
-    runs once (the pipeline caches it across the two writes)."""
-    cfg = cfg or PipelineConfig()
-    udf = make_extract_udf(spark, cfg)
-    enriched = segments.select("conv_id", "seg_id", udf(F.col("text")).alias("ext"))
+def split_extraction(enriched: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """enriched(conv_id, seg_id, ext) → (mentions(conv_id, seg_id, start,
+    end, text, label, confidence, method), triples(conv_id, seg_id, subj,
+    subj_label, pred, obj, obj_label, confidence)): two narrow explode
+    projections of the fused UDF output."""
     # explode_outer + null-filter instead of explode: plain explode makes
     # Catalyst insert a size()>0 pre-filter on the generator input, which
     # re-evaluates the UDF — 2x the extraction cost (verified with
     # .explain("formatted"): 2 ArrowEvalPython nodes vs 1)
     mentions = enriched.select(
         "conv_id", "seg_id", F.explode_outer("ext.mentions").alias("m")
-    ).filter(F.col("m").isNotNull()).select(
-        "conv_id",
-        "seg_id",
-        F.col("m.start").alias("start"),
-        F.col("m.end").alias("end"),
-        F.col("m.text").alias("text"),
-        F.col("m.label").alias("label"),
-        F.col("m.confidence").alias("confidence"),
-        F.col("m.method").alias("method"),
-    )
+    ).filter(F.col("m").isNotNull()).select("conv_id", "seg_id", "m.*")
     triples = enriched.select(
         "conv_id", "seg_id", F.explode_outer("ext.triples").alias("t")
-    ).filter(F.col("t").isNotNull()).select(
-        "conv_id",
-        "seg_id",
-        F.col("t.subj").alias("subj"),
-        F.col("t.subj_label").alias("subj_label"),
-        F.col("t.pred").alias("pred"),
-        F.col("t.obj").alias("obj"),
-        F.col("t.obj_label").alias("obj_label"),
-        F.col("t.confidence").alias("confidence"),
-    )
-    return enriched, mentions, triples
+    ).filter(F.col("t").isNotNull()).select("conv_id", "seg_id", "t.*")
+    return mentions, triples
+
+
+def extract_fused(
+    segments: DataFrame, spark: SparkSession, cfg: PipelineConfig | None = None
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """One fused pass → (enriched, mentions, triples).  Checkpoint the
+    enriched parent before consuming mentions AND triples so the UDF
+    runs once (the pipeline and the micro-batch body both do)."""
+    cfg = cfg or PipelineConfig()
+    udf = make_extract_udf(spark, cfg)
+    enriched = segments.select("conv_id", "seg_id", udf(F.col("text")).alias("ext"))
+    return (enriched, *split_extraction(enriched))
 
 
 def extract_mentions(segments: DataFrame, spark: SparkSession, cfg: PipelineConfig | None = None) -> DataFrame:
     """segments → mentions(conv_id, seg_id, start, end, text, label,
     confidence, method).  Narrow (shuffle-free) transformation."""
-    cfg = cfg or PipelineConfig()
-    udf = make_extract_mentions_udf(spark, cfg)
-    return (
-        segments.select("conv_id", "seg_id", F.explode_outer(udf(F.col("text"))).alias("m"))
-        .filter(F.col("m").isNotNull())
-        .select(
-            "conv_id",
-            "seg_id",
-            F.col("m.start").alias("start"),
-            F.col("m.end").alias("end"),
-            F.col("m.text").alias("text"),
-            F.col("m.label").alias("label"),
-            F.col("m.confidence").alias("confidence"),
-            F.col("m.method").alias("method"),
-        )
-    )
+    return extract_fused(segments, spark, cfg)[1]

@@ -86,7 +86,7 @@ def _sig_select(n_perms: int, mat: str = "") -> str:
 
 def _char_shingle_ctes(k: int, mat: str = "") -> str:
     """(id, g): distinct character k-shingles of lower(text) — the twin
-    of make_jaccard_udf's _shingles (len<=k → the whole string)."""
+    of linking._shingle_set (len<=k → the whole string)."""
     return f"""
 jc_shingles AS {mat}(
   SELECT DISTINCT id, substr(lt, i, {k}) AS g

@@ -2,12 +2,14 @@
 the reference's sequential per-file loop, cli.py:174-215).
 
 transcripts ─ quarantine split
-  → segments        (window ordering; checkpoint)
-  → mentions        (Arrow UDF, narrow; checkpoint)
-  → triples         (seg self-join + broadcast ontology; checkpoint)
-  → canonical_map   (MinHash-LSH + CC fixpoint; checkpoint)
-  → kg_nodes/edges  (joins through canonical_map; final tables)
-  → metadata_kg     (conversation-level value nodes + HAS_* edges)
+  → segments         (window ordering; checkpoint)
+  → extraction       (ONE Arrow UDF pass: mentions + co-occurrence
+                      triples per segment, narrow; checkpoint)
+  → mentions/triples (two explode projections of it; checkpoints)
+  → canonical_map    (MinHash-LSH + CC fixpoint; checkpoint)
+  → kg_nodes/edges   (joins through canonical_map; final tables)
+  → metadata_kg      (conversation-level value nodes + HAS_* edges,
+                      built alongside the chain above)
   → metrics/_lineage (per-partition counts + stage wall-times)
 
 Resume semantics (north_rule "resumable from checkpoint"): every stage
@@ -33,6 +35,7 @@ from docs2kg_spark.config import PipelineConfig
 from docs2kg_spark.io.sinks import TableStore
 from docs2kg_spark.operators.graph import conversation_metadata_kg, materialize_kg
 from docs2kg_spark.operators.linking import build_canonical_map
+from docs2kg_spark.operators.mentions import extract_fused, split_extraction
 from docs2kg_spark.operators.segments import segment_transcripts
 
 
@@ -67,27 +70,20 @@ def normalize_input(transcripts: DataFrame) -> DataFrame:
     )
 
 
-def split_quarantine(transcripts: DataFrame) -> tuple[DataFrame, DataFrame]:
-    transcripts = normalize_input(transcripts)
+def quarantine_split(
+    transcripts: DataFrame, obs: Observation | None = None
+) -> tuple[DataFrame, DataFrame]:
+    """Normalized input → (good rows, quarantined rows with a reason).
+    With ``obs``, the bad-row count is observed as ``n_bad`` on the good
+    rows' first action, so a clean input costs no extra scan: callers
+    write the quarantined rows only when ``obs.get["n_bad"]`` > 0."""
+    normalized = normalize_input(transcripts)
     bad = F.col("conv_id").isNull() | F.col("turn_idx").isNull()
-    return transcripts.filter(~bad), transcripts.filter(bad).withColumn(
+    src = normalized.observe(obs, F.sum(bad.cast("long")).alias("n_bad")) if obs else normalized
+    quarantined = normalized.filter(bad).withColumn(
         "quarantine_reason", F.lit("null conv_id or turn_idx")
     )
-
-
-def partition_metrics(df: DataFrame, stage: str) -> DataFrame:
-    """Per-partition row counts (SURVEY §2.4 'stage metrics') computed at
-    runtime — the generic form for any DataFrame.  The pipeline itself
-    sources the same numbers from parquet footers after each stage write
-    (TableStore.partition_counts): O(files) driver-side metadata reads
-    instead of one full re-scan Spark job per stage, which at 1000
-    executors would serialize a scan of every stage output through the
-    metrics path."""
-    return (
-        df.groupBy(F.spark_partition_id().alias("partition_id"))
-        .agg(F.count("*").alias("rows"))
-        .withColumn("stage", F.lit(stage))
-    )
+    return src.filter(~bad), quarantined
 
 
 def run_pipeline(
@@ -97,6 +93,18 @@ def run_pipeline(
     cfg: PipelineConfig | None = None,
     resume: bool = True,
 ) -> dict:
+    """transcripts → every KG table under ``workdir`` (stage graph in the
+    module doc).  Each stage is one ``run_stage`` call: with resume=True
+    it is skipped when every table it writes has a marker carrying this
+    input's fingerprint; otherwise it is built and its tables written,
+    several tables of one stage as concurrent Spark jobs.  The metadata
+    KG, the quarantine write, the ontology update and the block-stats
+    marker run on driver threads alongside the critical path.
+
+    Returns each table read back from the store, plus ``fingerprint``,
+    ``store`` and ``stage_times``: table name → seconds from the start
+    of its stage to its write, 0.0 when resumed (``extraction`` is
+    listed only when mentions/triples had to be rebuilt)."""
     cfg = cfg or PipelineConfig()
     store = TableStore(spark, workdir)
     # the fingerprint exists to key resume markers; with resume=False the
@@ -115,21 +123,40 @@ def run_pipeline(
     side_futures: list = []
 
     def submit_side(fn, *args):
-        side_futures.append(side.submit(fn, *args))
+        future = side.submit(fn, *args)
+        side_futures.append(future)
+        return future
 
-    meta_future = None
+    def current(names: tuple[str, ...]) -> bool:
+        return resume and all(store.stage_complete(n, fp) and store.exists(n) for n in names)
 
-    def run_stage(name: str, build, partition_by: list[str] | None = None) -> DataFrame:
-        """Build + persist one stage unless its checkpoint is current."""
-        if resume and store.stage_complete(name, fp) and store.exists(name):
-            stage_times[name] = 0.0
-            return store.read(name)
-        t0 = time.monotonic()
-        df = build()
-        store.write(df, name, partition_by)
-        store.write_marker(name, fp)
-        stage_times[name] = time.monotonic() - t0
-        return store.read(name)
+    def run_stage(names: str | tuple[str, ...], build):
+        """Build + persist one stage unless its checkpoints are current.
+        ``build`` returns one DataFrame per table name; returns the
+        table(s) read back from the store."""
+        single = isinstance(names, str)
+        names = (names,) if single else names
+        if current(names):
+            stage_times.update(dict.fromkeys(names, 0.0))
+        else:
+            t0 = time.monotonic()
+            dfs = (build(),) if single else build()
+
+            def write(df: DataFrame, name: str) -> None:
+                store.write(df, name)
+                store.write_marker(name, fp)
+                stage_times[name] = time.monotonic() - t0
+
+            if single:
+                write(dfs[0], names[0])
+            else:
+                # tables of one stage share inputs but not outputs: one
+                # job each, concurrently, keeps every slot busy through
+                # the other's write tail
+                with ThreadPoolExecutor(max_workers=len(names)) as pool:
+                    list(pool.map(write, dfs, names))
+        tables = [store.read(n) for n in names]
+        return tables[0] if single else tables
 
     # Any critical-path failure must still join the background
     # quarantine/metrics/metadata writes: otherwise those threads keep
@@ -142,20 +169,9 @@ def run_pipeline(
         # Quarantine detection rides the segments pass as an Observation
         # (zero extra scan): the common case — a clean input — costs
         # nothing, and only when bad rows are OBSERVED does a side job
-        # scan the input again to materialize them with reasons.  The
-        # old always-on side write re-scanned the full input every run.
-        normalized = normalize_input(transcripts)
-        bad_cond = F.col("conv_id").isNull() | F.col("turn_idx").isNull()
-        seg_fresh = not (resume and store.stage_complete("segments", fp) and store.exists("segments"))
-        q_obs = Observation("quarantine_probe") if seg_fresh else None
-        src = normalized.observe(q_obs, F.sum(bad_cond.cast("long")).alias("n_bad")) if q_obs else normalized
-        good = src.filter(~bad_cond)
-        quarantined = normalized.filter(bad_cond).withColumn(
-            "quarantine_reason", F.lit("null conv_id or turn_idx")
-        )
-        quarantine_ddl = ", ".join(
-            f"{c} {t}" for c, t in INPUT_SCHEMA.items() if c in normalized.columns
-        ) + ", quarantine_reason string"
+        # scan the input again to materialize them with reasons.
+        q_obs = None if current(("segments",)) else Observation("quarantine_probe")
+        good, quarantined = quarantine_split(transcripts, q_obs)
 
         if cfg.segment_bucket_turns > 0:
             from docs2kg_spark.operators.segments import segment_transcripts_bucketed
@@ -169,110 +185,35 @@ def run_pipeline(
         if q_obs is not None:
             # segments just materialized → the observation is bound
             if int(q_obs.get["n_bad"] or 0) > 0:
-                submit_side(lambda: store.write(quarantined, "quarantine"))
+                submit_side(store.write, quarantined, "quarantine")
             else:
+                quarantine_ddl = ", ".join(
+                    f"{c} {t}" for c, t in INPUT_SCHEMA.items() if c in transcripts.columns
+                ) + ", quarantine_reason string"
                 store.write_rows([], quarantine_ddl, "quarantine")
         elif not store.exists("quarantine"):
             # segments resumed but quarantine missing (partial workdir)
-            submit_side(lambda: store.write(quarantined, "quarantine"))
+            submit_side(store.write, quarantined, "quarantine")
 
         # metadata KG depends only on the raw turns — overlap it with the
         # whole extraction/linking critical path
-        def _meta_branch():
-            t0 = time.monotonic()
-            n, e = conversation_metadata_kg(good)
-            store.write(n, "metadata_nodes")
-            store.write(e, "metadata_edges")
-            store.write_marker("metadata_nodes", fp)
-            store.write_marker("metadata_edges", fp)
-            stage_times["metadata_nodes"] = time.monotonic() - t0
-
-        import os as _os
-
-        # Overlapping the metadata branch with the extraction critical path
-        # measured NEGATIVE at high local parallelism (local[32]: +50s — its
-        # shuffle/write tasks interleave into the Arrow-UDF stage's slots and
-        # strangle it) but POSITIVE at low (local[8]: −4s, where the branch
-        # is otherwise a pure serial insertion).  Default: overlap on real
-        # clusters (the branch's tasks land on OTHER executors) and in
-        # local mode up to 8 slots; serial above that.  DOCS2KG_OVERLAP_META
-        # overrides either way.
-        # The paired same-stage table writes (mentions+triples,
-        # kg_nodes+kg_edges) measured POSITIVE at both levels (local[32]:
-        # 37s vs 55s serial) — two jobs over the SAME checkpointed input keep
-        # all slots busy through each other's write tails — so they stay
-        # concurrent by default.
-        _ov = _os.environ.get("DOCS2KG_OVERLAP_META")
-        if _ov is not None:
-            overlap_meta = _ov != "0"
-        elif spark.sparkContext.master.startswith("local"):
-            overlap_meta = spark.sparkContext.defaultParallelism <= 8
-        else:
-            overlap_meta = True
-        paired_writes = _os.environ.get("DOCS2KG_PAIRED_WRITES", "1") != "0"
-        if resume and store.stage_complete("metadata_nodes", fp) and store.exists("metadata_nodes"):
-            stage_times["metadata_nodes"] = 0.0
-            meta_future = None
-        elif overlap_meta:
-            meta_future = side.submit(_meta_branch)
-        else:
-            _meta_branch()
-            meta_future = None
+        meta_future = submit_side(
+            run_stage, ("metadata_nodes", "metadata_edges"), lambda: conversation_metadata_kg(good)
+        )
 
         # fused extraction: mentions + triples in ONE Arrow pass, no shuffle
         # (the per-segment pair generation of operators/relations.py is
-        # computed inside the UDF; see mentions.py::_triples_of)
-        if resume and all(
-            store.stage_complete(s, fp) and store.exists(s) for s in ("mentions", "triples")
-        ):
-            stage_times["mentions"] = stage_times["triples"] = 0.0
-            mentions = store.read("mentions")
-            triples = store.read("triples")
-        else:
-            t0 = time.monotonic()
-            from docs2kg_spark.operators.mentions import extract_fused
-
-            enriched, _, _ = extract_fused(segments, spark, cfg)
-            # checkpoint the UDF output itself: guarantees exactly ONE
-            # extraction pass (a .persist() can evict under memory pressure
-            # and silently re-run the UDF) and adds a resume point at the
-            # most expensive stage
-            store.write(enriched, "extraction")
-            stage_times["x_extraction_write"] = time.monotonic() - t0
-            store.write_marker("extraction", fp)
-            enriched_t = store.read("extraction")
-            mentions_df = enriched_t.select(
-                "conv_id", "seg_id", F.explode_outer("ext.mentions").alias("m")
-            ).filter(F.col("m").isNotNull()).select(
-                "conv_id", "seg_id", "m.start", "m.end", "m.text", "m.label", "m.confidence", "m.method"
-            )
-            triples_df = enriched_t.select(
-                "conv_id", "seg_id", F.explode_outer("ext.triples").alias("t")
-            ).filter(F.col("t").isNotNull()).select(
-                "conv_id", "seg_id", "t.subj", "t.subj_label", "t.pred", "t.obj", "t.obj_label", "t.confidence"
-            )
-            # the two explode-projections read the same checkpoint and are
-            # independent → concurrent jobs
-
-            def _timed_write(df, name):
-                s = time.monotonic()
-                store.write(df, name)
-                return time.monotonic() - s
-
-            if paired_writes:
-                with ThreadPoolExecutor(max_workers=2) as pool:
-                    fm = pool.submit(_timed_write, mentions_df, "mentions")
-                    ft = pool.submit(_timed_write, triples_df, "triples")
-                    stage_times["x_mentions_write"] = fm.result()
-                    stage_times["triples"] = ft.result()
-            else:
-                stage_times["x_mentions_write"] = _timed_write(mentions_df, "mentions")
-                stage_times["triples"] = _timed_write(triples_df, "triples")
-            store.write_marker("mentions", fp)
-            store.write_marker("triples", fp)
-            stage_times["mentions"] = time.monotonic() - t0
-            mentions = store.read("mentions")
-            triples = store.read("triples")
+        # computed inside the UDF; see mentions.py::_triples_of).  The UDF
+        # output is checkpointed as its own stage: exactly ONE extraction
+        # pass (a .persist() can evict under memory pressure and silently
+        # re-run the UDF), and a rerun that lost mentions or triples
+        # resumes from it instead of re-running the UDF.
+        mentions, triples = run_stage(
+            ("mentions", "triples"),
+            lambda: split_extraction(
+                run_stage("extraction", lambda: extract_fused(segments, spark, cfg)[0])
+            ),
+        )
 
         # ontology round-trip (reference: semantic_kg/base.py:60-82): merge
         # newly discovered mention types into the persisted ontology so an
@@ -296,39 +237,12 @@ def run_pipeline(
 
         canonical_map = run_stage("canonical_map", _canonical)
 
-        if resume and store.stage_complete("kg_nodes", fp) and store.exists("kg_nodes"):
-            stage_times["kg_nodes"] = 0.0
-        else:
-            t0 = time.monotonic()
-            schema = dict(cfg.layout_schema) if cfg.layout_schema is not None else None
-            nodes_df, edges_df = materialize_kg(
-                segments, mentions, triples, canonical_map, layout_schema=schema
-            )
-            def _timed_store_write(df, name):
-                s = time.monotonic()
-                store.write(df, name)
-                return time.monotonic() - s
-
-            if paired_writes:
-                # node and edge tables share inputs but not outputs → concurrent
-                with ThreadPoolExecutor(max_workers=2) as pool:
-                    fn = pool.submit(_timed_store_write, nodes_df, "kg_nodes")
-                    fe = pool.submit(_timed_store_write, edges_df, "kg_edges")
-                    stage_times["x_kg_nodes_write"] = fn.result()
-                    stage_times["x_kg_edges_write"] = fe.result()
-            else:
-                stage_times["x_kg_nodes_write"] = _timed_store_write(nodes_df, "kg_nodes")
-                stage_times["x_kg_edges_write"] = _timed_store_write(edges_df, "kg_edges")
-            store.write_marker("kg_nodes", fp)
-            store.write_marker("kg_edges", fp)
-            stage_times["kg_nodes"] = time.monotonic() - t0
-        kg_nodes = store.read("kg_nodes")
-        kg_edges = store.read("kg_edges")
-
-        if meta_future is not None:
-            meta_future.result()
-        metadata_nodes = store.read("metadata_nodes")
-        metadata_edges = store.read("metadata_edges")
+        schema = dict(cfg.layout_schema) if cfg.layout_schema is not None else None
+        kg_nodes, kg_edges = run_stage(
+            ("kg_nodes", "kg_edges"),
+            lambda: materialize_kg(segments, mentions, triples, canonical_map, layout_schema=schema),
+        )
+        metadata_nodes, metadata_edges = meta_future.result()
 
         # drain side jobs (quarantine, ontology, block stats), then assemble
         # the combined metrics table driver-side: per-partition rows come
@@ -372,8 +286,6 @@ def run_pipeline(
             "store": store,
         }
     except BaseException:
-        if meta_future is not None:
-            meta_future.exception()
         for f in side_futures:
             f.exception()
         side.shutdown(wait=True)

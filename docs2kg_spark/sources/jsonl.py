@@ -6,7 +6,7 @@ reads newline-delimited JSON transcripts into the contract schema
 (BASELINE.json::input_hint) and captures malformed lines as quarantine
 rows instead of dropping them silently or killing the job — the same
 visible-quarantine policy the pipeline applies to null-keyed rows
-(plans/pipeline.py::split_quarantine).
+(plans/pipeline.py::quarantine_split).
 
 Scale design: read lines with `spark.read.text` and parse with
 `from_json` against an EXPLICIT schema (no sampling inference pass over

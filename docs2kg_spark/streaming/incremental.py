@@ -25,7 +25,7 @@ from pyspark.sql import types as T
 
 from docs2kg_spark.config import PipelineConfig
 from docs2kg_spark.io.sinks import TableStore
-from docs2kg_spark.operators.mentions import extract_fused
+from docs2kg_spark.operators.mentions import extract_fused, split_extraction
 from docs2kg_spark.operators.segments import segment_transcripts
 
 TRANSCRIPT_SCHEMA = T.StructType(
@@ -166,6 +166,7 @@ def update_canonical_state(
     """
     from docs2kg_spark.operators.linking import (
         band_table,
+        cap_blocks,
         connected_components,
         entity_nodes,
         verified_edges,
@@ -196,13 +197,9 @@ def update_canonical_state(
     else:
         all_bands = new_bands
 
-    # block cap on the block size as of THIS snapshot (same rule as
-    # candidate_pairs, applied incrementally — see module doc for the
-    # divergence on blocks that cross the cap mid-stream)
-    sizes = all_bands.groupBy("band_key").agg(F.count("*").alias("block_size"))
-    capped = sizes.filter(F.col("block_size") > cfg.max_block_size).select("band_key")
-    kept_new = new_bands.join(F.broadcast(capped), on="band_key", how="left_anti")
-    kept_all = all_bands.join(F.broadcast(capped), on="band_key", how="left_anti")
+    # block cap on the block size as of THIS snapshot (see module doc for
+    # the divergence on blocks that cross the cap mid-stream)
+    _, (kept_all, kept_new) = cap_blocks(all_bands, cfg, new_bands)
 
     # new×all candidate join (both-new pairs appear once after the
     # least/greatest orientation + distinct; an old×old pair cannot appear
@@ -281,13 +278,10 @@ def process_kg_batch(
     """The foreachBatch body of incremental_kg — also callable directly
     with a plain DataFrame (micro-batch semantics without a stream)."""
     from docs2kg_spark.operators.graph import static_kg_parts
-    from docs2kg_spark.plans.pipeline import normalize_input
+    from docs2kg_spark.plans.pipeline import quarantine_split
 
-    normalized = normalize_input(batch_df)
-    bad_cond = F.col("conv_id").isNull() | F.col("turn_idx").isNull()
     q_obs = Observation(f"inc_quarantine_{batch_id}")
-    src = normalized.observe(q_obs, F.sum(bad_cond.cast("long")).alias("n_bad"))
-    good = src.filter(~bad_cond)
+    good, quarantined = quarantine_split(batch_df, q_obs)
 
     seg_obs = Observation(f"inc_segs_{batch_id}")
     segs = (
@@ -298,33 +292,11 @@ def process_kg_batch(
     n_segs = int(seg_obs.get["n"] or 0)
     n_bad = int(q_obs.get["n_bad"] or 0)
     if n_bad:
-        store.append_batch(
-            normalized.filter(bad_cond).withColumn(
-                "quarantine_reason", F.lit("null conv_id or turn_idx")
-            ),
-            "quarantine",
-            batch_id,
-        )
+        store.append_batch(quarantined, "quarantine", batch_id)
 
     # ONE Arrow extraction pass, checkpointed, then two narrow projections
-    enriched, _, _ = extract_fused(segs, spark, cfg)
-    enriched = enriched.localCheckpoint()
-    mentions = (
-        enriched.select("conv_id", "seg_id", F.explode_outer("ext.mentions").alias("m"))
-        .filter(F.col("m").isNotNull())
-        .select(
-            "conv_id", "seg_id", "m.start", "m.end", "m.text", "m.label",
-            "m.confidence", "m.method",
-        )
-    )
-    triples = (
-        enriched.select("conv_id", "seg_id", F.explode_outer("ext.triples").alias("t"))
-        .filter(F.col("t").isNotNull())
-        .select(
-            "conv_id", "seg_id", "t.subj", "t.subj_label", "t.pred", "t.obj",
-            "t.obj_label", "t.confidence",
-        )
-    )
+    enriched = extract_fused(segs, spark, cfg)[0].localCheckpoint()
+    mentions, triples = split_extraction(enriched)
 
     m_obs, t_obs = Observation(f"inc_m_{batch_id}"), Observation(f"inc_t_{batch_id}")
     store.append_batch(segs, "segments", batch_id)
@@ -419,7 +391,7 @@ def compact_kg(
     re-segmented from ``transcripts`` — required only if any exist, and
     bounded to exactly those conversations via a broadcast semi-join."""
     from docs2kg_spark.operators.graph import entity_kg_parts, static_kg_parts
-    from docs2kg_spark.plans.pipeline import normalize_input
+    from docs2kg_spark.plans.pipeline import quarantine_split
 
     cfg = cfg or PipelineConfig()
     store = TableStore(spark, workdir)
@@ -454,9 +426,7 @@ def compact_kg(
                 f"{n_split} conversation(s) span multiple micro-batches; their "
                 "seg_idx-dependent structure needs repair — pass transcripts="
             )
-        good = normalize_input(transcripts).filter(
-            F.col("conv_id").isNotNull() & F.col("turn_idx").isNotNull()
-        )
+        good, _ = quarantine_split(transcripts)
         src = good.join(F.broadcast(split_convs), on="conv_id", how="left_semi")
         rep_nodes, rep_edges = static_kg_parts(segment_transcripts(src), schema)
         static_nodes = static_nodes.join(

@@ -72,6 +72,28 @@ def test_expire_snapshots_prunes_history_keeps_current(spark, store):
         store.snapshot_read("t", 1)                 # expired id is gone
 
 
+def test_expire_snapshots_commits_log_before_deleting(spark, store, monkeypatch):
+    """A crash after the pruned log commits but before the data dirs are
+    gone leaves orphan dirs, never log entries pointing at deleted data."""
+    import shutil
+
+    for i in range(3):
+        store.snapshot_write(
+            spark.createDataFrame([(i, "x")], "k int, v string"), "t"
+        )
+
+    def crash(*args, **kwargs):
+        raise OSError("simulated crash during rmtree")
+
+    monkeypatch.setattr(shutil, "rmtree", crash)
+    with pytest.raises(OSError, match="simulated crash"):
+        store.expire_snapshots("t", keep_last=1)
+    monkeypatch.undo()
+    with pytest.raises(ValueError, match="expired"):
+        store.snapshot_read("t", 1)
+    assert _rows(store, "t") == [(2, "x")]
+
+
 def test_vlog_commit_is_atomic(spark, store, tmp_path):
     store.snapshot_write(spark.createDataFrame([(1, "a")], "k int, v string"), "t")
     # no torn .tmp left behind after a successful commit
